@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** G-group similarity search + F5 embedding near-dup (SURVEY §2).
   *
@@ -786,136 +786,31 @@ object Embeddings {
       .select(col("cluster"), col("a"), col("b"), col("cos"))
   }
 
-  /** Memo for [[semanticDedup]] results, keyed by the canonicalized
-    * assignment plan + parameters. The components stage runs an
-    * iterative loop through localCheckpoint (plan-cache-OPAQUE RDD
-    * scans — each invocation mints fresh RDDs), so unlike the
-    * declarative shared frames (Dedup.sharedShingleSet, the h7/h8/p7
-    * token frame) Spark's CacheManager can never dedup repeated
-    * semanticDedup invocations by plan match. This memo restores the
-    * sharing a declarative plan would get: equal (corpus, init,
-    * iters, tau, algo) in one JVM compute once; the returned frame is
-    * persisted so re-executions are cache reads. Entries are bounded
-    * by distinct parameterizations per session and dropped with the
-    * session's TrackedCache release epoch.
+  /** SemDeDup: k-means cells bound the pair work; within a cell, pairs
+    * at cosine ≥ `tau` form components, and each component keeps its
+    * member nearest the centroid. Returns (component, keep_id,
+    * n_members, keep_d).
+    *
+    * Results are [[TrackedCache]] session artifacts, keyed by the
+    * canonicalized assignment plan + parameters. The components stage
+    * runs an iterative loop through localCheckpoint (plan-cache-OPAQUE
+    * RDD scans — each invocation mints fresh RDDs), so unlike the declarative shared frames (Dedup.sharedShingleSet,
+    * the h7/h8/p7 token frame) Spark's CacheManager can never dedup
+    * repeated semanticDedup invocations by plan match. The memo
+    * restores the sharing a declarative plan would get: equal (corpus,
+    * init, iters, tau, algo) compute once; the returned frame is
+    * persisted so re-executions are cache reads.
     */
-  private val semanticDedupMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-       Double, ComponentsAlgo), DataFrame]
-
-  /** Insertion order per application, for the FIFO size cap. */
-  private val semanticDedupMemoOrder =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.Queue[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Double, ComponentsAlgo)]]()
-
-  /** Memo bound (r10 ADVICE): entries hold canonicalized plans plus
-    * localCheckpoint RDD references, so a long-lived session sweeping
-    * a parameter grid (e.g. τ) must not accumulate them unboundedly.
-    * 16 covers every legitimate concurrent-sharing shape (the bench's
-    * triple-bill is 2 keys) while an eviction only costs a recompute.
-    */
-  private val MemoCap = 16
-
-  private val memoEvictorInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** One release-epoch hook per (app, session) — NOT one per memo
-    * key: a per-key closure captures its plan-holding key and lives
-    * in TrackedCache's hook queue until release, which would be the
-    * r10 leak relocated. This set resets at each release so the next
-    * epoch re-installs.
-    */
-  private val releaseEvictorInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, SparkSession)]()
-
-  private def dropAppMemo(appId: String): Unit = {
-    semanticDedupMemo.keySet.removeIf(_._1 == appId)
-    val q = semanticDedupMemoOrder.remove(appId)
-    if (q != null) q.clear()
-  }
-
   def semanticDedup(df: DataFrame, init: DataFrame, idCol: String,
                     vecCol: String, iters: Int, tau: Double,
                     algo: ComponentsAlgo = ComponentsAlgo.MinLabel): DataFrame = {
-    val appId = df.sparkSession.sparkContext.applicationId
-    if (memoEvictorInstalled.add(appId)) {
-      // memo entries hold session-backed plans + localCheckpoint RDDs;
-      // evict per application so multi-session processes (test
-      // suites, notebook hosts) don't retain them past the app —
-      // including the insertion-order queue, whose entries hold the
-      // same plans
-      df.sparkSession.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            dropAppMemo(appId)
-            memoEvictorInstalled.remove(appId)
-          }
-        })
-    }
-    if (releaseEvictorInstalled.add((appId, df.sparkSession))) {
-      // entries also die with the CACHE EPOCH (r10 ADVICE):
-      // TrackedCache.release is the corpus boundary, and dropping the
-      // whole app's memo there unreferences its checkpoint RDDs for
-      // the ContextCleaner
-      val sessionRef = df.sparkSession
-      TrackedCache.onRelease(sessionRef, () => {
-        dropAppMemo(appId)
-        releaseEvictorInstalled.remove((appId, sessionRef))
-      })
-    }
     val assignFrame = kmeansAssignments(df, init, idCol, vecCol, iters)
-    val key = (appId, assignFrame.queryExecution.analyzed.canonicalized,
+    val key = ("semanticDedup", assignFrame.queryExecution.analyzed.canonicalized,
       tau, algo)
-    // compute OUTSIDE the map, publish with putIfAbsent: CHM forbids
-    // long-running mapping functions — computeIfAbsent would hold the
-    // bin lock for the whole training+label pipeline, serializing
-    // unrelated same-bin parameterizations (and deadlocking on any
-    // re-entrant path). Worst case two racing threads both compute;
-    // the loser's frame is just an extra unpersist-managed cache entry.
-    val memoed = {
-      val existing = semanticDedupMemo.get(key)
-      if (existing != null) existing
-      else {
-        val fresh = TrackedCache.persist(
-          semanticDedupCompute(assignFrame, idCol, vecCol, tau, algo))
-        val raced = semanticDedupMemo.putIfAbsent(key, fresh)
-        if (raced != null) raced
-        else {
-          // FIFO size cap: bounds a parameter sweep that never calls
-          // release. Eviction goes through TrackedCache.untrack so
-          // the frame (and the plan + checkpoint RDD references it
-          // holds) leaves the session's persisted queue too — a
-          // plain unpersist would keep the object alive there until
-          // the next release. A polled key that turns out to be a
-          // LIVE entry racing this insert is re-queued, never
-          // silently dropped from tracking.
-          val order = semanticDedupMemoOrder.computeIfAbsent(appId,
-            _ => new java.util.concurrent.ConcurrentLinkedQueue())
-          order.add(key)
-          while (order.size > MemoCap) {
-            val oldest = order.poll()
-            if (oldest != null) {
-              if (oldest == key) order.add(key) // re-queue self, evict another
-              else {
-                val evicted = semanticDedupMemo.remove(oldest)
-                if (evicted != null) TrackedCache.untrack(evicted)
-              }
-            }
-          }
-          fresh
-        }
-      }
+    TrackedCache.getOrCompute(df.sparkSession, key) {
+      TrackedCache.persist(
+        semanticDedupCompute(assignFrame, idCol, vecCol, tau, algo))
     }
-    // an unpersist between invocations (an eviction race, an external
-    // unpersist) leaves the memo entry valid — its plan recomputes
-    // from the checkpointed label RDDs; re-register so the
-    // cached-read contract holds for every caller
-    if (memoed.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      TrackedCache.persist(memoed)
-    memoed
   }
 
   private def semanticDedupCompute(assignFrame: DataFrame, idCol: String,
