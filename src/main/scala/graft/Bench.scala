@@ -19,6 +19,37 @@ object Bench {
   private def run(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** One timed evaluation: its seconds, or the exception's class and
+    * message when building or running the query throws. A throw is
+    * never a timing — its time-to-throw would read as a fast query.
+    */
+  def timeOne(mk: () => org.apache.spark.sql.DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      run(mk())
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+  }
+
+  /** Min over the passes per query, and the queries that threw in any
+    * pass with their first error. A failed query is left out of the
+    * min and so out of every total.
+    */
+  def minOfPasses(names: Seq[String], passes: Seq[Map[String, Either[String, Double]]])
+      : (Seq[(String, Double)], Seq[(String, String)]) = {
+    val (failed, ok) = names.partition(n => passes.exists(_(n).isLeft))
+    (ok.map(n => n -> passes.map(_(n).toOption.get).min),
+      failed.map(n => n -> passes.flatMap(_(n).left.toOption).head))
+  }
+
+  /** The `failed` field: `[{"query":..,"error":..},...]`. */
+  def failedJson(failed: Seq[(String, String)]): String = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val arr = mapper.createArrayNode()
+    failed.foreach { case (q, e) => arr.addObject().put("query", q).put("error", e) }
+    mapper.writeValueAsString(arr)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
@@ -92,13 +123,6 @@ object Bench {
             emb.filter(col("vec_id") < cells), "vec_id", "embedding", 2, 0.3))
       )
     }
-    def timeOne(mk: () => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try run(mk())
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // Three timed passes, min per query: a one-off GC pause or host
     // contention spike otherwise lands entirely on whichever query it
     // interrupts (r3 recorded 12.7 s on a trivial projection), and
@@ -106,7 +130,7 @@ object Bench {
     // by ±20% — a third pass cuts that tail for ~2 min of wall time.
     val mainSized =
       if (onlyPrefix.isDefined) Seq.empty else sizedEntries(sfDir)
-    def timedPass(): Map[String, Double] = (names.map { name =>
+    def timedPass(): Map[String, Either[String, Double]] = (names.map { name =>
       name -> timeOne(() => SparkEntry.queries(name)(spark, sfDir))
     } ++ mainSized.map { case (name, mk) => name -> timeOne(mk) }).toMap
     val p1 = timedPass()
@@ -119,9 +143,9 @@ object Bench {
     // before e13 — most-expensive-first puts the interesting entries
     // at the FRONT, and the trailing slowest10/total fields mean a
     // tail-truncated capture still ends with the headline numbers.
-    val results = (names ++ mainSized.map(_._1))
-      .map(n => n -> math.min(p1(n), math.min(p2(n), p3(n))))
-      .sortBy { case (_, v) => -v }
+    val (minResults, mainFailed) =
+      minOfPasses(names ++ mainSized.map(_._1), Seq(p1, p2, p3))
+    val results = minResults.sortBy { case (_, v) => -v }
     // ms precision keeps the line compact
     def fmt(v: Double): String = f"$v%.3f"
 
@@ -164,14 +188,14 @@ object Bench {
       .orElse((Seq("testdata/sf1") ++ repoSf1)
         .find(d => new java.io.File(s"$d/lineitem.parquet").exists))
       .getOrElse("testdata/sf1")
-    val sf1Json: String =
-      if (onlyPrefix.isDefined) ""
+    val (sf1Json, sf1Failed): (String, Seq[(String, String)]) =
+      if (onlyPrefix.isDefined) ("", Nil)
       else if (!new java.io.File(s"$sf1Dir/lineitem.parquet").exists) {
         System.err.println(
           s"[bench] sf1 section SKIPPED: no sf1 data at '$sf1Dir' " +
             s"(cwd-relative testdata/sf1 and ${repoSf1.getOrElse("<no classpath root>")} " +
             "both missing; set SPARK_GRAFT_SF1_DIR)")
-        ""
+        ("", Nil)
       } else {
         val constantBound = Set("f5_dedup_embedding", "p9_semantic_dedup")
         // the 2x criterion needs a same-scale number, not the whole
@@ -206,15 +230,16 @@ object Bench {
           .filter(n => math.floorMod(n.hashCode, 8) == slice)
         val sf1Names = (slowest ++ forced ++ rotating).distinct
         val sf1Sized = sizedEntries(sf1Dir)
-        def sf1Pass(): Seq[(String, Double)] =
-          sf1Names.map { name =>
+        def sf1Pass(): Map[String, Either[String, Double]] =
+          (sf1Names.map { name =>
             name -> timeOne(() => SparkEntry.queries(name)(spark, sf1Dir))
-          } ++ sf1Sized.map { case (name, mk) => name -> timeOne(mk) }
-        val sp1 = sf1Pass().toMap
+          } ++ sf1Sized.map { case (name, mk) => name -> timeOne(mk) }).toMap
+        val sp1 = sf1Pass()
         System.gc()
-        val sp2 = sf1Pass().toMap
-        val all = sp1.keys.toSeq.map(n => n -> math.min(sp1(n), sp2(n)))
-          .sortBy { case (_, v) => -v }
+        val sp2 = sf1Pass()
+        val (sf1Min, sf1Fail) =
+          minOfPasses(sf1Names ++ sf1Sized.map(_._1), Seq(sp1, sp2))
+        val all = sf1Min.sortBy { case (_, v) => -v }
         val sf1qs = all.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
           .mkString("{", ",", "}")
         // rotation PROVENANCE (r11 verdict): which slice ran and what
@@ -231,7 +256,8 @@ object Bench {
         val ratios = all.collect { case (k, v) if rm.contains(k) =>
           "\"" + k + "\":" + f"${v / math.max(rm(k), 0.05)}%.1f"
         }.mkString("{", ",", "}")
-        s""""sf1":$sf1qs,"sf1_ratio_vs_sf01":$ratios,$sf1Rot"sf1_data_ratio":10,"sf1_dir":"$sf1Dir","""
+        (s""""sf1":$sf1qs,"sf1_ratio_vs_sf01":$ratios,$sf1Rot"sf1_data_ratio":10,"sf1_dir":"$sf1Dir",""",
+          sf1Fail.map { case (n, e) => s"sf1:$n" -> e })
       }
 
     // Host-calibration ANCHOR (r11 verdict: that round's host ran
@@ -244,7 +270,7 @@ object Bench {
     val anchor = Calibration.measure(spark, cpus.toInt)
 
     val passes = results.map { case (k, _) =>
-      "\"" + k + "\":[" + Seq(p1(k), p2(k), p3(k)).map(fmt).mkString(",") + "]"
+      "\"" + k + "\":[" + Seq(p1, p2, p3).map(p => fmt(p(k).toOption.get)).mkString(",") + "]"
     }.mkString("{", ",", "}")
     // The min-of-3 is session-cache-WARM for every trainer/shared-
     // frame consumer (the one-time training cost lands in pass 1 of
@@ -252,7 +278,9 @@ object Bench {
     // "serve", not "train+serve". Pass 1 IS the cache-cold leg —
     // surface its total explicitly (r16 verdict item: both spellings
     // visible; additions only, methodology unchanged).
-    val coldTotal = results.map { case (k, _) => p1(k) }.sum
+    val coldTotal = results.map { case (k, _) => p1(k).toOption.get }.sum
+    // thrown queries, never timed: every total above leaves them out
+    val failed = failedJson(mainFailed ++ sf1Failed)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val slowest10 = results.take(10)
@@ -270,7 +298,8 @@ object Bench {
       "\"" + k + "\":\"" + queryClass.getOrElse(k, "compute") + "\""
     }.mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-      s""""passes":$passes,"cold_total_sec":${fmt(coldTotal)},""" + sf1Json +
+      s""""passes":$passes,"cold_total_sec":${fmt(coldTotal)},""" +
+      s""""failed":$failed,""" + sf1Json +
       s""""queries":$qs,"n_queries":${results.size},""" +
       s""""classes":$classesJson,""" +
       s""""max_query":"${mx._1}","max_sec":${fmt(mx._2)},""" +
@@ -305,6 +334,7 @@ object Bench {
       s""""max_query":"${mx._1}","max_sec":${fmt(mx._2)},""" +
       s""""queries":$slowest10,""" +
       s""""anchor":$anchor,"cold_total_sec":${fmt(coldTotal)},""" +
+      s""""failed":$failed,""" +
       s""""full_artifact":"${outPath.getOrElse("")}",""" +
       s""""total_sec":${fmt(total)},"sf":"$sfDir"}"""
     println(stdoutJson)

@@ -6,6 +6,10 @@ Usage: tools/bench_cmp.py OLD.json NEW.json [threshold_ratio]
 Normalizes each query's ratio by its class anchor (t1 for compute, sh
 for shuffle — the r13 two-anchor discipline) so host drift between the
 two runs does not masquerade as code change.
+
+Prints each artifact's `failed` list (queries that threw, never timed;
+artifacts written before the field existed read as none) and exits 1
+when NEW has a failed query that OLD does not.
 """
 import json
 import sys
@@ -20,6 +24,12 @@ t1 = na.get("t1_sec", 1.0) / oa.get("t1_sec", 1.0) if oa.get("t1_sec") else 1.0
 sh = na.get("sh_sec", 1.0) / oa.get("sh_sec", 1.0) if oa.get("sh_sec") else 1.0
 print(f"total {old['total_sec']} -> {new['total_sec']}  "
       f"anchor ratios: t1 {t1:.3f} sh {sh:.3f}")
+failed = {}
+for label, art in (("OLD", old), ("NEW", new)):
+    failed[label] = {f["query"]: f["error"] for f in art.get("failed", [])}
+    print(f"{label} failed: {len(failed[label])}")
+    for q, err in sorted(failed[label].items()):
+        print(f"  {q:44s} {err}")
 rows = []
 for q, nv in new["queries"].items():
     ov = old["queries"].get(q)
@@ -41,3 +51,8 @@ for norm, q, ov, nv, cls in rows:
         print(f"  {q:44s} {ov:7.3f} -> {nv:7.3f}  x{norm:.2f} [{cls}]")
 ncomp = sum(1 for r in rows if r[4] == "compute")
 print(f"\n{len(rows)} common entries ({ncomp} compute)")
+new_failures = sorted(set(failed["NEW"]) - set(failed["OLD"]))
+if new_failures:
+    print(f"FAIL: {len(new_failures)} queries fail in NEW but not in OLD: "
+          + ", ".join(new_failures))
+    sys.exit(1)
