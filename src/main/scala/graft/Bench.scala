@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. Queries are warmed once at sf0.001 first so
   * JIT/codegen compilation is not attributed to whichever query
@@ -53,13 +51,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // optional prefix filter (`runMain graft.Bench e14f`) for the
@@ -74,7 +66,7 @@ object Bench {
     // Warm pass doubles as the CLASSIFICATION pass (the r13 verdict's
     // two-baseline item): each query's executed plan is classified
     // compute-bound vs shuffle-bound ONCE, from its exchange count —
-    // cross-round diffs (tools/bench_diff.py) then normalize each
+    // cross-round diffs (tools/bench_cmp.py) then normalize each
     // class by its own anchor (t1 for compute, the sh shuffle leg for
     // shuffle), because one compute anchor provably under-corrects
     // shuffle-heavy walls on a contended host (r13 run 3: +15 %).
@@ -87,7 +79,7 @@ object Bench {
         // matches BroadcastExchange/ReusedExchange, so a broadcast-
         // join-heavy compute-bound query (≥3 broadcasts) would be
         // classified shuffle and normalized by the wrong anchor in
-        // tools/bench_diff.py. "Exchange hashpartitioning|range..."
+        // tools/bench_cmp.py. "Exchange hashpartitioning|range..."
         // is the physical shuffle node's own print form.
         // ShuffleExchangeExec prints as a bare "Exchange <partitioning>"
         // node; Broadcast/Reused carry their prefix glued on, so a
@@ -267,7 +259,7 @@ object Bench {
     // once-per-core through Spark tasks. Cross-round walls normalize
     // by the anchor ratio; mt/t1 >> 1 additionally flags a host that
     // was CONTENDED during the run, not merely slower.
-    val anchor = Calibration.measure(spark, cpus.toInt)
+    val anchor = Calibration.measure(spark, spark.sparkContext.defaultParallelism)
 
     val passes = results.map { case (k, _) =>
       "\"" + k + "\":[" + Seq(p1, p2, p3).map(p => fmt(p(k).toOption.get)).mkString(",") + "]"

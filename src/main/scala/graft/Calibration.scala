@@ -72,7 +72,7 @@ object Calibration {
     // exchange + hash aggregation, no I/O — whose result is asserted
     // (Σ id = n(n−1)/2), so a short-circuited plan can't pass.
     // Shuffle-classified queries normalize by THIS ratio in
-    // tools/bench_diff.py; compute-classified ones by t1.
+    // tools/bench_cmp.py; compute-classified ones by t1.
     // 8M rows and min-of-THREE: two same-code r14 runs measured the
     // 4M/min-of-2 spelling swinging ±15 % (0.527 vs 0.450 s) while t1
     // held to 0.3 % — a shuffle leg short enough to fit inside one

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The recommended session setup for running graft at scale — the
-  * conf a 1000-executor deployment wants, in one place:
+/** The one session recipe: every graft main and the test suite start
+  * here, and the benchmark builds on [[builder]]. The conf a
+  * 1000-executor deployment wants, in one place:
   *
   * - AQE on with skew-join splitting (hot aircraft / hot documents
   *   get their shuffle partitions split at runtime; ScaleOps salting
@@ -45,8 +46,15 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new plans.GraftExtensions)
 
-  /** Local development/test session at the given parallelism. */
-  def local(cores: Int): SparkSession =
+  /** `SPARK_GRAFT_CPUS`, or the host's core count when it is unset or
+    * empty. */
+  private def envCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty).map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Local session at the given parallelism. Code that needs the core
+    * count later reads `spark.sparkContext.defaultParallelism`. */
+  def local(cores: Int = envCores): SparkSession =
     builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)

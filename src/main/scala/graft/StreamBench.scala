@@ -2,7 +2,6 @@ package graft
 
 import graft.streaming.AdsbStream
 import graft.streaming.AdsbStream.{CurrentPosition, StreamDoc}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming throughput micro-bench (the batch bench's sibling):
@@ -42,13 +41,7 @@ object StreamBench {
     val only: String => Boolean =
       args.headOption.map(p => (s: String) => s.startsWith(p))
         .getOrElse(_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -262,7 +255,7 @@ object StreamBench {
                      else b.toLong * rate + i
           (b.toLong * rate + i, seed, dup)
         }.toDF("doc_id", "seed", "dup")
-          .repartition(cpus.toInt)
+          .repartition(spark.sparkContext.defaultParallelism)
           .as[(Long, Long, Boolean)]
           .mapPartitions(_.map { case (id, seed, dup) =>
             val png = graft.operators.MediaCodec.synthImagePng(seed, 96, 96)

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.HashFunctions
 import graft.streaming.AdsbStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The COMPOSED production streaming chain, end to end — the order a
@@ -52,18 +51,12 @@ import org.apache.spark.sql.functions._
   * the two indexes must grow linearly in SURVIVORS. Per-batch
   * per-stage counts print as one JSON line per rate.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.StreamChainBench"
+  * Usage: sbt "runMain graft.StreamChainBench"
   */
 object StreamChainBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its result invariant (identical agg/join totals, identical
   * component counts) so a fast-but-wrong path can't win.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.StressBench <scenario> [n]"
+  * Usage: sbt "runMain graft.StressBench <scenario> [n]"
   */
 object StressBench {
 
@@ -51,13 +51,7 @@ object StressBench {
 
   def main(args: Array[String]): Unit = {
     val scenario = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     def fmt(v: Double) = f"$v%.3f"
 
@@ -401,7 +395,8 @@ object StressBench {
         // (every image decodes, every planted cut/tone recovered).
         import spark.implicits._
         val n = if (args.length > 1) args(1).toLong else 20000L
-        val ids = spark.range(n).select(col("id")).as[Long].repartition(cpus.toInt)
+        val ids = spark.range(n).select(col("id")).as[Long]
+          .repartition(spark.sparkContext.defaultParallelism)
         val (imgOk, tImg) = timed {
           ids.mapPartitions(_.map { id =>
             val png = graft.operators.MediaCodec.synthImagePng(id, 96, 96)
@@ -523,7 +518,7 @@ object StressBench {
         // the host anchor (see [[Calibration]]): prepended to every
         // SCALE_r*_results.txt run so cross-round StressBench walls
         // are normalizable by host speed
-        println(s"""{"metric":"calibration","anchor":${Calibration.measure(spark, cpus.toInt)}}""")
+        println(s"""{"metric":"calibration","anchor":${Calibration.measure(spark, spark.sparkContext.defaultParallelism)}}""")
 
       case other =>
         System.err.println(s"unknown scenario: $other")

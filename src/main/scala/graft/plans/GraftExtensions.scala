@@ -8,7 +8,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 /** SQL-surface registration of graft's native expressions, so SQL
   * users get them without touching the Scala API:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)…
+  *   GraftSession.builder()…getOrCreate()   // applies GraftExtensions
   *   spark.sql("SELECT md5prefix64(text) FROM docs")
   *
   * [[GraftFunctions.register]] does the same against an

@@ -1,42 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.RewriteLatestByToArgMax
 
-/** The recommended session: AQE + skew handling + graft extensions.
-  *
-  * Care: specs share one JVM-wide session. getOrCreate would return
-  * it (ignoring extensions), and stop() would kill its SparkContext
-  * for every later suite — so this test clears the active/default
-  * session, builds a fresh one over the SAME context, and restores
-  * the previous session afterwards without stopping anything.
-  */
-class GraftSessionSpec extends AnyFunSuite {
+/** The shared spec session is a [[GraftSession]], so the recipe's conf
+  * and extensions are asserted on it directly. */
+class GraftSessionSpec extends SparkSpecBase {
 
   test("local session carries the scale conf and the SQL extensions") {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s = GraftSession.local(2)
-      assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
-      assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
-      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
-      // extensions applied: the injected SQL functions resolve
-      import s.implicits._
-      val h = s.sql("SELECT md5prefix64('abc') AS h").as[Long].collect().head
-      assert(h == graft.functions.HashUtil.md5Prefix64("abc"))
-      val g = s.sql("SELECT gramhashes64('abcdefghij', 8) AS g")
-        .as[Seq[Long]].collect().head
-      assert(g.length == 3)
-      assert(g.head == graft.functions.HashUtil.md5Prefix64("abcdefgh") %
-        graft.functions.HashUtil.P)
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true")
+    assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    // extensions applied: the injected SQL functions resolve
+    import spark.implicits._
+    val h = spark.sql("SELECT md5prefix64('abc') AS h").as[Long].collect().head
+    assert(h == graft.functions.HashUtil.md5Prefix64("abc"))
+    val g = spark.sql("SELECT gramhashes64('abcdefghij', 8) AS g")
+      .as[Seq[Long]].collect().head
+    assert(g.length == 3)
+    assert(g.head == graft.functions.HashUtil.md5Prefix64("abcdefgh") %
+      graft.functions.HashUtil.P)
+    // ... and the optimizer rule is in the session's optimizer
+    assert(spark.sessionState.optimizer.batches.flatMap(_.rules)
+      .contains(RewriteLatestByToArgMax))
   }
 }

@@ -5,14 +5,10 @@ import graft.plans.RewriteLatestByToArgMax
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
-/** Specs for the window→argmax optimizer rule (K-group). */
+/** Specs for the window→argmax optimizer rule (K-group). The spec
+  * session is a [[GraftSession]], so the rule is always on; the
+  * reference result excludes it by name. */
 class RewriteRuleSpec extends SparkSpecBase {
-
-  private def withRule[T](body: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RewriteLatestByToArgMax
-    try body finally spark.experimental.extraOptimizations = prev
-  }
 
   // single-sort-key latest-row window: the argMax shape the rule targets
   private def latestByTs = {
@@ -23,41 +19,44 @@ class RewriteRuleSpec extends SparkSpecBase {
       .select("user_id", "event_id", "value")
   }
 
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+
   test("rule turns the latest-row window into a sort-free hash aggregate") {
-    withRule {
-      val plan = latestByTs.queryExecution.executedPlan.toString
-      assert(plan.contains("max_by"), s"no max_by aggregate:\n$plan")
-      assert(plan.contains("HashAggregate"), s"not a hash aggregate:\n$plan")
-      assert(!plan.contains("Sort ["), s"sort still present:\n$plan")
-      assert(!plan.contains("WindowGroupLimit"), s"window group limit remains:\n$plan")
-    }
+    val plan = latestByTs.queryExecution.executedPlan.toString
+    assert(plan.contains("max_by"), s"no max_by aggregate:\n$plan")
+    assert(plan.contains("HashAggregate"), s"not a hash aggregate:\n$plan")
+    assert(!plan.contains("Sort ["), s"sort still present:\n$plan")
+    assert(!plan.contains("WindowGroupLimit"), s"window group limit remains:\n$plan")
   }
 
   test("rewritten plan returns exactly the window-based result") {
-    val expected = latestByTs.collect().map(_.toSeq).sortBy(_.head.toString)
-    val got = withRule { latestByTs.collect().map(_.toSeq).sortBy(_.head.toString) }
-    assert(got.toSeq == expected.toSeq)
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, RewriteLatestByToArgMax.ruleName)
+    val expected = try {
+      val reference = latestByTs
+      val plan = reference.queryExecution.optimizedPlan.toString
+      assert(plan.contains("row_number"), s"reference is not the window plan:\n$plan")
+      sortedRows(reference)
+    } finally spark.conf.unset(excluded)
+    assert(sortedRows(latestByTs) == expected)
   }
 
   test("rule leaves top-k windows (rn <= 3) untouched") {
-    withRule {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts").desc)
-      val df = Tables.events(spark, sf)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      assert(df.queryExecution.optimizedPlan.toString.contains("row_number"))
-      assert(df.count() > 0)
-    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("user_id")).orderBy(col("ts").desc)
+    val df = Tables.events(spark, sf)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    assert(df.queryExecution.optimizedPlan.toString.contains("row_number"))
+    assert(df.count() > 0)
   }
 
   test("rule leaves multi-key orderings untouched (kept as window group limit)") {
-    withRule {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
-      val df = Tables.events(spark, sf)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      assert(df.queryExecution.optimizedPlan.toString.contains("row_number"))
-      assert(df.count() > 0)
-    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
+    val df = Tables.events(spark, sf)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    assert(df.queryExecution.optimizedPlan.toString.contains("row_number"))
+    assert(df.count() > 0)
   }
 }
